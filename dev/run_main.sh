@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (no sbt lock needed).
-# Usage: [SPARK_DRIVER_MEM=16g] [SPARK_GRAFT_SF_DIR=...] dev/run_main.sh graft.ProbeGraph 10 sp
+# Usage: [SPARK_DRIVER_MEM=16g] [SPARK_GRAFT_SF_DIR=...] dev/run_main.sh graft.BenchOne g_pagerank target/sf1 1
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MEM="${SPARK_DRIVER_MEM:-8g}"

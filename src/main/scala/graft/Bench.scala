@@ -195,7 +195,7 @@ object Bench {
     // bursts that outlasted three BACK-TO-BACK reps; min-of-N can't see a
     // burst longer than the N reps, only the sentinel stamps can, and
     // both of those were taken outside the burst window. The honest fix
-    // is adjudication against ProbeQueries re-runs (which is what the
+    // is adjudication against targeted re-runs (which is what the
     // judge did), not more consecutive reps.
     val extrasOff = sys.env.get("GRAFT_BENCH_EXTRAS").contains("0")
     val extraResults =

@@ -131,7 +131,7 @@ object BenchSf10 {
     // entries are in the run they now time as a UNIT per rep: reach pays
     // the cold fused pass, harmonic is the memoized second read off the
     // same warm session (no settle in between — that IS the serving
-    // economics ProbeFused measured: 675.8 s cold + 8.4 s memoized),
+    // economics measured in r15: 675.8 s cold + 8.4 s memoized),
     // and the artifact attributes it via "memoized_after".
     val fusedPair = Seq("g_reach_profile", "g_harmonic_all")
     val groups: Seq[Seq[String]] =

@@ -52,22 +52,4 @@ object Caches {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
   }
-
-  /** Keep-what-preexisted deep clear (r13, ADVICE r12): unpersist every
-    * RDD in the context EXCEPT `keepIds`, plus the SQL registry. For probe
-    * harnesses (ProbeLpa, ProbeMerge) whose cross-rep fixtures are
-    * localCheckpoints: a blanket `clearAll(spark)` severs their lineage
-    * and the next rep dies with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-    * Callers snapshot `spark.sparkContext.getPersistentRDDs.keySet` while
-    * only their fixtures are persisted, then call this after each timed
-    * rep — operator caches and leaked checkpoints go, fixtures survive.
-    * The registry is always cleared: registered SQL frames are per-rep
-    * working state, never fixtures. */
-  def clearAllExcept(spark: org.apache.spark.sql.SparkSession,
-      keepIds: Set[Int], blocking: Boolean = false): Unit = {
-    clearAll()
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-      if (!keepIds(id)) r.unpersist(blocking)
-    }
-  }
 }

@@ -56,7 +56,6 @@ case class HllRegMaxUnionAgg(
   with UnaryLike[Expression] {
 
   require(lgK == 8, "kernel is pinned to the loop's lgK = 8 configuration")
-  private val k = 1 << lgK
 
   override def prettyName: String = "hll_regmax_union"
   override def dataType: DataType = BinaryType
@@ -162,6 +161,9 @@ final class HllRegMaxBuf(lgK: Int) {
     * the only layouts this loop produces). */
   def addSketch(b: Array[Byte]): Unit = {
     require(b.length >= 8 && b(2) == 7, "not an HLL image")
+    // an image of another lgK has a different register count and coupon
+    // slot mask: merging it would silently truncate or misplace registers
+    require((b(3) & 0xff) == lgK, s"HLL image lgK ${b(3) & 0xff} != kernel lgK $lgK")
     (b(7) & 3) match {
       case 0 => // LIST: count at byte 6, coupons from offset 8
         val n = b(6) & 0xff

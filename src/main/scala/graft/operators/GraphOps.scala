@@ -127,9 +127,8 @@ object GraphOps {
       .map(_.toLong).getOrElse(edges.count())
     // ~300k arcs/partition balances GraphX's per-stage task overhead
     // (dominant on near-empty partitions — measured 5×, r4) against core
-    // utilization; overridable for tuning experiments at other scales
-    val arcsPerPart = sys.env.get("GRAFT_ARCS_PER_PART").map(_.toInt).getOrElse(300000)
-    val target = math.max(4, math.ceil(2.0 * rows / arcsPerPart).toInt)
+    // utilization
+    val target = math.max(4, math.ceil(2.0 * rows / 300000).toInt)
     val df = if (target < cur) edges.coalesce(target) else edges
     val arcs = df.rdd.flatMap { r =>
       val (src, dst, w) = (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -162,92 +161,13 @@ object GraphOps {
       .limit(k)
   }
 
-  /** DataFrame-native PageRank — the same fixpoint iteration
-    * staticPageRank runs (init 1.0; r ← 0.15 + 0.85·Σ r_nbr/deg_nbr),
-    * expressed as joins + aggregations so Tungsten codegen owns the hot
-    * loop and each iteration is one shuffle of the (small) rank table
-    * against the cached degree-annotated arc list. Kept as the measured
-    * alternative for the regime where GraphX's per-iteration RDD
-    * scheduling dominates (VERDICT r2 "watch" on g_pagerank); the
-    * sanctioned GraphX path stays the queries entry. GraphSpec pins both
-    * implementations to the same fixture fixpoints. */
-  private[graft] def pageRankDF(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val arcs = edges.select($"src", $"dst")
-      .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
-    val deg = arcs.groupBy($"src").agg(count(lit(1)).as("deg"))
-    // localCheckpoint truncates lineage each iteration — without it the
-    // logical plan nests one level per iteration and Catalyst analysis
-    // cost grows quadratically (the iterative-DataFrame pitfall).
-    // partitionedCheckpoint (r9): keeps hashpartitioning(src) through
-    // the checkpoint so the 10 per-round joins shuffle only the rank
-    // frame, never the arcs (a bare localCheckpoint loses it under AQE)
-    val arcsD = partitionedCheckpoint(
-      arcs.join(deg, "src").select($"src", $"dst", $"deg"), "src",
-      sorted = true)
-    val verts = deg.select($"src".as("v")).localCheckpoint(eager = true)
-    var ranks = verts.select($"v", lit(1.0).as("rank"))
-      .localCheckpoint(eager = true)
-    // r17: rank state is consumed once per round, so checkpoint every
-    // SECOND round (the communitiesOf cadence argument) — bit-identical,
-    // one node-sized materialization job saved per skipped round.
-    for (i <- 0 until iters) {
-      val contribs = arcsD.join(ranks, $"src" === $"v")
-        .groupBy($"dst").agg(sum($"rank" / $"deg").as("msg"))
-      ranks = verts
-        .join(contribs, $"v" === $"dst", "left")
-        .select($"v", (lit(0.15) + lit(0.85) * coalesce($"msg", lit(0.0))).as("rank"))
-      if (i % 2 == 1 || i == iters - 1)
-        ranks = ranks.localCheckpoint(eager = true)
-    }
-    ranks.select($"v".as("part"), round($"rank", 6).as("rank"))
-      .orderBy($"rank".desc, $"part")
-  }
-
-  /** Weighted static PageRank over an arbitrary canonical (src, dst,
-    * weight) edge frame: rank mass follows edge weight — msg = rank ·
-    * w/wdeg(src) instead of rank/deg(src) — so a product co-purchased
-    * 50× pulls proportionally more rank than a one-off pairing. Same
-    * DataFrame fixpoint loop as pageRankDF (one shuffle of the small
-    * rank table per iteration against the cached weight-normalized arc
-    * list; localCheckpoint truncates lineage). Expression shapes are
-    * mirrored by the DuckDB oracle (CAST(w)/CAST(wdeg), damp folded from
-    * 1.0-0.15) so the result hash-matches at 6dp. */
-  private[graft] def pageRankWeightedOf(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val damp = 1.0 - 0.15 // fold exactly as the oracle's (1.0 - 0.15)
-    val arcs = edges.select($"src", $"dst", $"weight")
-      .unionAll(edges.select($"dst".as("src"), $"src".as("dst"), $"weight"))
-    val wdeg = arcs.groupBy($"src").agg(sum($"weight").as("wdeg"))
-    val arcsD = partitionedCheckpoint(
-      arcs.join(wdeg, "src")
-        .select($"src", $"dst",
-          ($"weight".cast("double") / $"wdeg".cast("double")).as("rw")), "src",
-      sorted = true)
-    val verts = wdeg.select($"src".as("v")).localCheckpoint(eager = true)
-    var ranks = verts.select($"v", lit(1.0).as("rank"))
-      .localCheckpoint(eager = true)
-    // r17: same cadence-2 checkpoint as pageRankDF (single consumer)
-    for (i <- 0 until iters) {
-      val contribs = arcsD.join(ranks, $"src" === $"v")
-        .groupBy($"dst").agg(sum($"rank" * $"rw").as("msg"))
-      ranks = verts
-        .join(contribs, $"v" === $"dst", "left")
-        .select($"v", (lit(0.15) + lit(damp) * coalesce($"msg", lit(0.0))).as("rank"))
-      if (i % 2 == 1 || i == iters - 1)
-        ranks = ranks.localCheckpoint(eager = true)
-    }
-    ranks.select($"v".as("part"), round($"rank", 6).as("rank"))
-  }
-
-  /** Weighted static PageRank on GraphX — the same fixpoint as
-    * pageRankWeightedOf but with GraphX's per-iteration scheduling
-    * instead of DataFrame checkpoints (measured: the DF form's
-    * localCheckpoint materialization made it the slowest bench query at
-    * sf1, 24.6 s vs 16.7 s for unweighted GraphX). Mirrors
-    * PageRank.runWithOptions' caching discipline; expression shapes
+  /** Weighted static PageRank on GraphX: rank mass follows edge weight
+    * — msg = rank · w/wdeg(src) instead of rank/deg(src) — so a product
+    * co-purchased 50× pulls proportionally more rank than a one-off
+    * pairing. A DataFrame checkpoint loop of the same fixpoint measured
+    * 24.6 s at sf1, against 16.7 s for GraphX's unweighted PageRank, so
+    * GraphX runs it. Mirrors PageRank.runWithOptions' caching
+    * discipline; expression shapes
     * (rank·(w/wdeg), 0.15 + (1.0-0.15)·Σ) match the recursive-CTE
     * oracle bit-for-bit modulo 6dp-absorbed sum order. */
   private[graft] def pageRankWeightedGX(edges: DataFrame, iters: Int): DataFrame = {
@@ -280,8 +200,7 @@ object GraphOps {
   }
 
   // G5b — weighted PageRank over the co-purchase graph (the edge weights
-  // G1 computes finally drive the ranking). GraphX path; the DataFrame
-  // twin (pageRankWeightedOf) stays spec-pinned to the same fixpoints.
+  // G1 computes finally drive the ranking).
   def pageRankWeighted(s: SparkSession, dir: String, iters: Int = 10, k: Int = 20): DataFrame = {
     import s.implicits._
     pageRankWeightedGX(edgesUnsorted(s, dir), iters)
@@ -726,7 +645,7 @@ object GraphOps {
     * discovery IS the distance. Each level is two keyed shuffles of the
     * FRONTIER (≤ V×L rows), never of the full distance table;
     * localCheckpoint truncates lineage per level (the iterative-DataFrame
-    * pitfall, same as pageRankDF). Levels run to the landmark
+    * pitfall). Levels run to the landmark
     * eccentricity (~3-4 on the co-purchase graph; `maxHops` bounds
     * pathological chains). Unreachable pairs emit no row — the Pregel
     * ShortestPaths contract. Unlike GraphX's replicated per-vertex
@@ -1251,33 +1170,14 @@ object GraphOps {
     partitionedCheckpoint(base, "src", sorted = true)
   }
 
-  /** Round-0 label frame for the LPA loops: identity labels by default,
-    * or caller-provided warm-start labels (r12, VERDICT r11 #2 — the
-    * incremental-update regime needs an entry point that can present a
-    * collapsed frontier). Warm labels are joined against the arc node
-    * set so the contract stays total: nodes the caller's frame misses
-    * fall back to identity, extra rows in the caller's frame are
-    * ignored. Both loops share this, so plain-vs-delta stays an A/B of
-    * the LOOP, never of the seed. */
-  private[graft] def lpaStart(arcs: DataFrame,
-      init: Option[DataFrame]): DataFrame = {
-    val s = arcs.sparkSession
-    import s.implicits._
-    val nodes = arcs.select($"src".as("v")).distinct()
-    (init match {
-      case None => nodes.select($"v", $"v".as("lbl"))
-      case Some(df) =>
-        nodes.join(df.select($"v", $"lbl".as("init_lbl")), Seq("v"), "left")
-          .select($"v", coalesce($"init_lbl", $"v").as("lbl"))
-    }).localCheckpoint(eager = true)
-  }
-
-  private[graft] def communitiesOf(edges: DataFrame, iters: Int,
-      initialLabels: Option[DataFrame] = None): DataFrame = {
+  private[graft] def communitiesOf(edges: DataFrame, iters: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
     val arcs = loopArcs(edges, withWeight = true)
-    var labels = lpaStart(arcs, initialLabels)
+    // round 0: every node labelled by itself
+    var labels = arcs.select($"src".as("v")).distinct()
+      .select($"v", $"v".as("lbl"))
+      .localCheckpoint(eager = true)
     // r17: checkpoint every SECOND round instead of every round. The
     // label frame is consumed exactly once per round (the next vote
     // join), so chaining two rounds into one lazy plan is bit-identical
@@ -1300,190 +1200,24 @@ object GraphOps {
     labels
   }
 
-  /** Label-change-frontier (delta) LPA — EXACT refinement of
-    * communitiesOf (r10, VERDICT r9 #1: the 429 s sf10 floor was the
-    * per-round (dst, label) vote aggregate shuffling the full ~240M-row
-    * arc-join output for all 5 rounds, even though LPA's change rate
-    * collapses after round 2).
-    *
-    * The invariant that makes the delta exact: under the SYNCHRONOUS
-    * update, round t+1's vote at node v reads only its in-neighbors'
-    * round-t labels. If none of those changed in the t-1→t transition,
-    * the round-t vote at v re-reads the exact multiset round t-1 read,
-    * so its argmax — labels_t(v) — is reproduced: carrying the label
-    * forward IS the synchronous result. Hence rounds ≥2 only re-vote
-    * the "touched" nodes (out-neighbors of last round's changed set):
-    *
-    *   changed_t = {v : labels_t(v) ≠ labels_{t-1}(v)}   (node-sized)
-    *   touched   = distinct dst of arcs out of changed_t (node-sized)
-    *   labels_{t+1} = revote(touched) ∪ carry-forward(rest)
-    *
-    * Same fixed-round semantics, bit-identical labels, same oracle hash
-    * (GraphSpec pins delta ≡ full re-vote per intermediate round count
-    * on fixtures + the sf corpus). Converged early (changed = ∅) ⇒ every
-    * remaining round is a no-op and the loop exits — also exact.
-    *
-    * Scale shape: changed/touched ride BROADCAST hash joins against the
-    * src-partitioned arc checkpoint (two arc scans, zero arc shuffles),
-    * and the vote aggregate — the old bottleneck — now shuffles only the
-    * in-arcs of touched nodes, which shrinks with the frontier. Rounds
-    * where the frontier is still wide (> half the nodes, or past the
-    * broadcast cap on huge graphs) fall back to the full re-vote, which
-    * is cheaper than two near-complete arc scans.
-    *
-    * Regime (r11 ProbeLpa, MEASURED): from a COLD identity start this
-    * corpus's change rate never collapses within the 5-round contract
-    * (frontier > n/2 every round), so the plain loop wins — the entry
-    * path routes there. The delta leg's regime is the WARM start
-    * (`initialLabels`, r12): near-converged or incrementally-updated
-    * labels present a collapsed frontier from round 2 on, and rounds
-    * past the first full vote cost only the perturbation's cascade —
-    * see ProbeLpa's warm leg for the measurement. */
-  private[graft] def communitiesDeltaOf(edges: DataFrame, iters: Int,
-      maxBroadcastNodes: Long = 5000000L,
-      initialLabels: Option[DataFrame] = None): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val arcs = loopArcs(edges, withWeight = true)
-    var labels = lpaStart(arcs, initialLabels)
-    val nNodes = labels.count()
-    def argmax(votes: DataFrame): DataFrame = votes
-      .groupBy($"dst")
-      .agg(min(struct((-$"vote").as("nv"), $"lbl".as("lbl"))).as("m"))
-      .select($"dst".as("v"), $"m.lbl".as("lbl"))
-    def fullVote(lbls: DataFrame): DataFrame =
-      argmax(arcs.join(lbls, $"src" === $"v")
-        .groupBy($"dst", $"lbl").agg(sum($"weight").as("vote")))
-    var changed: Option[DataFrame] = None // None ⇒ full re-vote this round
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      val next = (changed match {
-        case None => fullVote(labels)
-        case Some(ch) =>
-          val touched = arcs.join(broadcast(ch), $"src" === $"c")
-            .select($"dst".as("c")).distinct()
-            .localCheckpoint(eager = true)
-          // hub-heavy frontiers can touch far more nodes than changed —
-          // the broadcast cap guards the frontier's OUT-set too
-          if (touched.count() > math.min(nNodes / 2, maxBroadcastNodes))
-            fullVote(labels)
-          else {
-            val revoted = argmax(
-              arcs.join(broadcast(touched), $"dst" === $"c").drop("c")
-                .join(labels, $"src" === $"v")
-                .groupBy($"dst", $"lbl").agg(sum($"weight").as("vote")))
-            labels.join(broadcast(touched), $"v" === $"c", "left_anti")
-              .unionAll(revoted)
-          }
-      }).localCheckpoint(eager = true)
-      if (round < iters - 1) {
-        val ch = next.as("n")
-          .join(labels.select($"v", $"lbl".as("prev")), "v")
-          .filter($"lbl" =!= $"prev")
-          .select($"v".as("c"))
-          .localCheckpoint(eager = true)
-        val nCh = ch.count()
-        if (nCh == 0) converged = true // fixpoint: remaining rounds no-op
-        changed =
-          if (nCh == 0 || nCh > nNodes / 2 || nCh > maxBroadcastNodes) None
-          else Some(ch)
-      }
-      labels = next
-      round += 1
-    }
-    labels
-  }
-
-  /** GraphX aggregateMessages twin of communitiesOf (r9, the
-    * pageRankWeightedGX precedent): same synchronous LPA update, the
-    * engine leg for the regime where the arc list fits executor storage
-    * — the repo's own measurement (PageRank sf10: GraphX 77-104 s vs DF
-    * loop 381 s) shows aggregateMessages wins ~3.7× there because the
-    * per-round work is an in-memory message pass, not a checkpointed
-    * shuffle. Votes are BIGINT weight sums merged per (dst, label); the
-    * argmax comparator is (vote DESC, label ASC) — the exact
-    * min(struct(-vote, lbl)) the DF leg aggregates — so the two legs
-    * are RESULT-IDENTICAL (integer votes: no float-order divergence
-    * class at all, stronger than the PageRank twins' 6dp equivalence;
-    * GraphSpec pins fixture + corpus identity). Vertex state is one
-    * Long label (the PageRank regime, NOT the replicated-map regime
-    * that OOMs ShortestPaths); the per-message maps are transient and
-    * degree-bounded. */
-  private[graft] def communitiesGX(edges: DataFrame, iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    var lg: Graph[Long, Long] = graphOf(edges).mapVertices((vid, _) => vid)
-    lg.cache()
-    for (_ <- 0 until iters) {
-      val votes = lg.aggregateMessages[Map[Long, Long]](
-        ctx => ctx.sendToDst(Map(ctx.srcAttr -> ctx.attr)),
-        (a, b) => b.foldLeft(a) { case (m, (l, w)) =>
-          m.updated(l, m.getOrElse(l, 0L) + w) },
-        org.apache.spark.graphx.TripletFields.Src)
-      val prev = lg
-      lg = lg.outerJoinVertices(votes) { (_, old, m) =>
-        m.fold(old)(_.minBy { case (l, v) => (-v, l) }._1)
-      }.cache()
-      lg.vertices.foreachPartition(_ => ()) // materialize before unpersist
-      prev.unpersistVertices(blocking = false)
-      prev.edges.unpersist(blocking = false)
-    }
-    s.createDataFrame(lg.vertices).toDF("v", "lbl")
-  }
-
   // G11 — co-purchase communities via deterministic synchronous LPA
   // (the modularity-free community primitive next to G6's connectivity:
   // CC answers "reachable at all", LPA answers "densely co-purchased").
   // Reference scope: the Neo4j product graph is the natural home of a
   // community query (neo4j_service.py builds the graph; GDS labelPropagation
   // is the standard call on such a store).
-  // SANCTIONED LEG (r9, measured): the checkpointed-DF loop. With the
-  // arc frame genuinely src-partitioned (partitionedCheckpoint — the
-  // r9 AQE discovery), the DF loop reads 26.2 s at sf1 where the GraphX
-  // aggregateMessages twin reads 66.9 s: LPA's messages are per-triplet
-  // Map allocations merged object-by-object, a regime GraphX pays GC
-  // for while the DF loop's votes are codegen'd columnar aggs. (The r8
-  // "GraphX is 3.7× faster" premise was measured against DF loops whose
-  // repartition was silently VOID under AQE — see partitionedCheckpoint.)
-  // The GX twin stays, result-identical and spec-pinned, as the
-  // measured alternate for environments where it wins.
+  // One engine: the checkpointed-DF loop (r9, measured 26.2 s at sf1
+  // against 66.9 s for a GraphX aggregateMessages form, whose per-triplet
+  // Map messages pay GC where the DF loop's votes are codegen'd columnar
+  // aggs). A label-change-frontier variant also lost (r11, sf10: 294.5 s
+  // against 269.7 s): min-label LPA on this dense graph changes more
+  // than half the nodes in every one of the 5 rounds, so there is no
+  // quiet frontier to skip.
   def communities(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     import s.implicits._
-    // r11 (VERDICT r10 #1/#2, MEASURED — ProbeLpa, SURVEY §5 r11): the
-    // delta-frontier leg is DEMOTED; the plain full-vote loop is the
-    // sanctioned leg at every scale. The r10 delta design assumed LPA's
-    // change rate collapses after round 2; the sf10 probe (2M nodes,
-    // 119.6M canonical edges) measured changed-per-round [2.0M, 1.72M,
-    // 1.58M, 1.37M, 0.56M] — the frontier exceeds n/2 in EVERY round of
-    // the 5-round contract, so communitiesDeltaOf fell back to the full
-    // re-vote each round and paid only its frontier bookkeeping:
-    // same-session min-of-2, plain 269.7 s vs delta 294.5 s (sf0.1:
-    // 5.50 vs 8.78 s, BENCH_r09 vs r10). Min-label LPA on a dense
-    // co-purchase graph keeps cascading smaller labels for all 5
-    // rounds — there is no quiet frontier to exploit here.
-    // communitiesDeltaOf remains the specced opt-in twin (bit-identical;
-    // GraphSpec pins delta ≡ full per round count) for the regime it IS
-    // built for: label churn that actually collapses. r12 made that
-    // regime REACHABLE — both loops take `initialLabels` warm-start
-    // seeds, so re-running LPA over a near-converged or
-    // incrementally-updated graph presents the delta leg a collapsed
-    // frontier (ProbeLpa's warm leg measures it).
     communitiesOf(edgesUnsorted(s, dir), iters)
       .select($"v".as("part"), $"lbl".as("community"))
       .orderBy($"part")
-  }
-
-  /** Gate retained for callers that want the GraphX leg below a budget
-    * (legs are result-identical; the default call path is the DF loop —
-    * see `communities`). */
-  private[graft] def communitiesGated(edges: DataFrame, iters: Int,
-      cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 150000000L): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) communitiesDeltaOf(edges, iters)
-    else communitiesGX(edges, iters)
   }
 
   /** G12 core on any canonical edge list + owned-item set: mirror the
@@ -1531,9 +1265,9 @@ object GraphOps {
     * elsewhere — teleport mass returns to the SEED SET, not uniformly, so
     * rank measures topology-weighted proximity to the seeds. Fixed
     * synchronous rounds (G5's contract) ⇒ the result is a pure function
-    * of (edges, seeds) and replays as a recursive CTE; same per-iteration
-    * shape as pageRankDF: one shuffle of the node-sized rank frame
-    * against the cached degree-annotated arc list, localCheckpoint
+    * of (edges, seeds) and replays as a recursive CTE. Per iteration:
+    * one shuffle of the node-sized rank frame against the cached
+    * degree-annotated arc list, localCheckpoint
     * lineage truncation. |S| is the one driver scalar (a count — the
     * k-means-centroid argument); 1.0/|S| and 0.15·pv are single IEEE
     * divisions/products written identically by the oracle. */
@@ -1582,7 +1316,8 @@ object GraphOps {
     val seedTp = seeds.select($"v".as("dst"), lit(tp).as("tp"))
     var ranks = verts.select($"v", $"pv".as("rank"))
       .localCheckpoint(eager = true)
-    // r17: same cadence-2 checkpoint as pageRankDF (single consumer)
+    // r17: rank state is consumed once per round, so checkpoint every
+    // SECOND round (the communitiesOf cadence argument); bit-identical
     for (i <- 0 until iters) {
       ranks = arcsD.join(ranks, $"src" === $"v")
         .groupBy($"dst")
@@ -1870,68 +1605,6 @@ object GraphOps {
     auth.select($"id".as("part"), round($"v", 6).as("authority"))
   }
 
-  /** GraphX aggregateMessages twin of hitsOf (r9, the pageRankWeightedGX
-    * precedent): the same simultaneous (Jacobi) update — a_{t+1} from
-    * h_t via sendToDst, h_{t+1} from a_t via sendToSrc, each
-    * max-normalized — run as in-memory message passes instead of
-    * checkpointed shuffles. Vertex state is a (hub, auth) Double pair
-    * (the PageRank regime — no replicated maps); customer and part key
-    * spaces are disambiguated as 2·custkey / 2·partkey+1 (bipartite, so
-    * the roles never mix). The max normalizer is an order-independent
-    * comparison-reduction on both legs; the raw sums differ only in fp
-    * association order — G5's accepted 6dp-absorbed risk class
-    * (GraphSpec pins fixture + corpus identity of the rounded output). */
-  private[graft] def hitsGX(ed: DataFrame, iters: Int): DataFrame = {
-    val s = ed.sparkSession
-    import s.implicits._
-    // r10 (ADVICE r9): an edge-free frame must return the empty relation
-    // like hitsOf does — without this, rawA.values.max() below throws
-    // UnsupportedOperationException on the empty message RDD. r11
-    // (ADVICE r10): built positionally — the loop below reads columns by
-    // position (getLong(0)/getLong(1)), so the guard must not be the one
-    // place that demands a column literally named "p"
-    if (ed.isEmpty)
-      return ed.limit(0)
-        .select(col(ed.columns(1)).cast("long").as("part"),
-          lit(0.0).as("authority"))
-    val cur = ed.rdd.getNumPartitions
-    val rows = ed.queryExecution.optimizedPlan.stats.rowCount
-      .map(_.toLong).getOrElse(ed.count())
-    val arcsPerPart = sys.env.get("GRAFT_ARCS_PER_PART").map(_.toInt).getOrElse(300000)
-    val target = math.max(4, math.ceil(rows.toDouble / arcsPerPart).toInt)
-    val df = if (target < cur) ed.coalesce(target) else ed
-    val arcs = df.rdd.map(r => Edge(r.getLong(0) * 2, r.getLong(1) * 2 + 1, 1))
-    var g: Graph[(Double, Double), Int] = Graph.fromEdges(arcs, (1.0, 1.0),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    g.cache()
-    for (_ <- 0 until iters) {
-      val rawA = g.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr._1), _ + _,
-        org.apache.spark.graphx.TripletFields.Src)
-      val rawH = g.aggregateMessages[Double](
-        ctx => ctx.sendToSrc(ctx.dstAttr._2), _ + _,
-        org.apache.spark.graphx.TripletFields.Dst)
-      val maxA = rawA.values.max()
-      val maxH = rawH.values.max()
-      val prev = g
-      // every part vertex has in-arcs and every customer vertex out-arcs
-      // (they exist BECAUSE an edge names them), so the getOrElse never
-      // fires on the vertex kind each message targets
-      g = g.outerJoinVertices(rawA) { (_, attr, m) =>
-        (attr._1, m.map(_ / maxA).getOrElse(attr._2)) }
-        .outerJoinVertices(rawH) { (_, attr, m) =>
-          (m.map(_ / maxH).getOrElse(attr._1), attr._2) }
-        .cache()
-      g.vertices.foreachPartition(_ => ()) // materialize before unpersist
-      prev.unpersistVertices(blocking = false)
-      prev.edges.unpersist(blocking = false)
-    }
-    val auths = g.vertices.filter(_._1 % 2 == 1)
-      .map { case (vid, (_, a)) => ((vid - 1) / 2, a) }
-    s.createDataFrame(auths).toDF("part", "raw")
-      .select($"part", round($"raw", 6).as("authority"))
-  }
-
   // G17 — HITS hubs & authorities (Kleinberg 1999; GDS gds.alpha.hits)
   // over the bipartite customer→part purchase graph: authoritative
   // products are the ones bought by strong hub customers, and hub
@@ -1939,12 +1612,10 @@ object GraphOps {
   // recursion degree counts can't see. The co-purchase projection would
   // be HITS-degenerate (undirected ⇒ hubs ≡ authorities); the bipartite
   // purchase graph is where the two roles genuinely differ.
-  // SANCTIONED LEG (r9, measured): the checkpointed-DF loop — 19.1 s at
-  // sf1 vs the GraphX twin's 31.1 (two aggregateMessages passes + two
-  // RDD max() actions per round vs node-sized keyed joins against the
-  // genuinely pre-partitioned arc copies; same r9 AQE discovery as
-  // G11). The GX twin stays, 6dp-identical and spec-pinned, as the
-  // measured alternate.
+  // One engine: the checkpointed-DF loop (r9, measured 19.1 s at sf1
+  // against 31.1 s for a GraphX aggregateMessages form, whose two
+  // message passes + two RDD max() actions per round lost to node-sized
+  // keyed joins against the pre-partitioned arc copies).
   def hits(s: SparkSession, dir: String, iters: Int = 6, k: Int = 20): DataFrame = {
     import s.implicits._
     val ed = Caches.cached(s"hits-ed:$dir") {
@@ -1956,18 +1627,6 @@ object GraphOps {
     hitsOf(ed, iters)
       .orderBy($"authority".desc, $"part")
       .limit(k)
-  }
-
-  /** Gate retained for callers that want the GraphX leg below a budget
-    * (legs 6dp-identical; the default call path is the DF loop — see
-    * `hits`). */
-  private[graft] def hitsGated(ed: DataFrame, iters: Int,
-      cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 150000000L): DataFrame = {
-    def count = ed.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) hitsOf(ed, iters)
-    else hitsGX(ed, iters)
   }
 
   // G16 — personalized PageRank from one customer's purchase history
@@ -1997,8 +1656,8 @@ object GraphOps {
   // ball B_t(v)) and grows it by unioning neighbors' sketches each
   // round: B_t(v) = B_{t−1}(v) ∪ ⋃_{(v,u)∈arcs} B_{t−1}(u) — O(m)
   // register-merges per round regardless of ball size. Spark-native:
-  // the sketch column is a datasketches HLL binary via the codegen'd
-  // hll_sketch_agg / hll_union_agg built-ins; each node's ball flows
+  // the sketch column is a datasketches HLL binary built by the codegen'd
+  // hll_sketch_agg and unioned by hllRegMaxUnion; each node's ball flows
   // OUT along its arcs (join on src — the key the loopArcs checkpoint
   // is partitioned on, so only the node-sized ball frame shuffles per
   // round, the same contract as every iterative loop here); per-round
@@ -2009,61 +1668,8 @@ object GraphOps {
   // the profile is deterministic under any partitioning; estimates are
   // floats ⇒ rows-only (spec: exact on a coupon-mode fixture, ≡ exact
   // BFS closure within tolerance on the sf graph, monotone, n²
-  // fixpoint on a connected graph).
-  private[graft] def reachProfileOf(edges: DataFrame, iters: Int,
-      lgConfigK: Int = 8): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val arcs = loopArcs(edges, withWeight = false)
-    var balls = partitionedCheckpoint(
-      arcs.select($"src".as("v")).distinct()
-        .groupBy($"v").agg(hll_sketch_agg($"v", lgConfigK).as("sk")), "v")
-    // per-round scalars in ONE pass: the pair-count estimate plus an
-    // exact register-state checksum — sketch binaries are deterministic,
-    // so checksum equality across rounds means every ball is literally
-    // unchanged (a true fixpoint, not an estimate coincidence)
-    // bit_xor, not sum: a long SUM of per-node hashes overflows ANSI-mode
-    // BIGINT; XOR is order-independent, closed on longs, and equality is
-    // all the fixpoint test needs
-    def scalars(b: DataFrame): (Double, Long) = {
-      val r = b.agg(sum(hll_sketch_estimate($"sk")).cast("double"),
-        expr("bit_xor(xxhash64(v, sk))")).first()
-      (r.getDouble(0), r.getLong(1))
-    }
-    val (est0, chk0) = scalars(balls)
-    val rows = scala.collection.mutable.ArrayBuffer((0, est0, est0))
-    var prev = est0
-    var prevChk = chk0
-    var t = 1
-    var converged = false
-    while (t <= iters && !converged) {
-      val nxt = partitionedCheckpoint(
-        arcs.join(balls.select($"v".as("src"), $"sk"), "src")
-          .select($"dst".as("v"), $"sk")
-          .unionAll(balls.select($"v", $"sk"))
-          .groupBy($"v").agg(graft.functions.GraftFunctions.hllRegMaxUnion($"sk", lgConfigK).as("sk")), "v")
-      balls.unpersist(blocking = false) // loop discipline: one live frame
-      balls = nxt
-      val (est, chk) = scalars(balls)
-      rows += ((t, est, est - prev))
-      // HyperANF's own stopping rule: past the diameter every union is a
-      // no-op — once the register state repeats, all later rounds are
-      // bit-identical, so emit them as rows WITHOUT paying the joins
-      // (at sf10 the graph converges by t≈3 while the contract asks 6:
-      // the skipped rounds were ~1/3 of the 411 s first measurement)
-      converged = chk == prevChk
-      prev = est
-      prevChk = chk
-      t += 1
-    }
-    while (t <= iters) { rows += ((t, prev, 0.0)); t += 1 }
-    balls.unpersist(blocking = false)
-    s.createDataFrame(rows.toSeq).toDF("t", "est_pairs", "delta_pairs")
-      .select($"t", round($"est_pairs", 3).as("est_pairs"),
-        round($"delta_pairs", 3).as("delta_pairs"))
-      .orderBy($"t")
-  }
-
+  // fixpoint on a connected graph). The loop runs fused with G22's in
+  // reachHarmonicOf.
   def reachProfile(s: SparkSession, dir: String, iters: Int = 6): DataFrame =
     reachHarmonic(s, dir, iters)._1
 
@@ -2136,17 +1742,17 @@ object GraphOps {
   def harmonicAll(s: SparkSession, dir: String, iters: Int = 6): DataFrame =
     reachHarmonic(s, dir, iters)._2
 
-  /** G21+G22 FUSED (r15, VERDICT r14 #3): reachProfileOf and
-    * harmonicAllOf run the IDENTICAL sketch-growth loop — a dashboard
+  /** G21+G22 FUSED (r15, VERDICT r14 #3): G21's profile and G22's
+    * centrality run the IDENTICAL sketch-growth loop — a dashboard
     * wanting the distance CDF AND the centrality paid ~2× 320-380 s at
     * sf10 for one loop's information. This core runs the loop ONCE and
     * emits both frames: the per-round global pair-count scalar is one
     * extra 1-row aggregate on the state frame harmonicAllOf already
     * carries (riding the same pass as the convergence checksum), and the
-    * harmonic accumulator is G22's unchanged. The standalone cores stay
-    * as the spec-pinned references; FusedReachSpec asserts both sides of
-    * this pass row-for-row against them (exact in the coupon regime the
-    * fixtures and sf0.001 corpus run in).
+    * harmonic accumulator is G22's unchanged. The standalone
+    * harmonicAllOf stays as the spec-pinned reference: Wave15Spec
+    * asserts the harmonic frame row-for-row against it, and the profile
+    * against the exact closure (coupon-exact on the path fixture).
     *
     * Scale shape = the standalone loops': one node-sized state frame
     * shuffled per round along the src-partitioned arc checkpoint, one
@@ -2358,7 +1964,7 @@ object GraphOps {
     * = s_{i−2} is a period-2 cycle) AND the oscillation class a plain
     * no-move rule misses: measured at sf0.001, the corpus labeling
     * never reaches a fixpoint — from sweep ~20 a ~6-node limit cycle
-    * keeps moved > 0 forever (ProbeLouvainExit burned the full budget
+    * keeps moved > 0 forever (a sweep-budget probe burned the full budget
     * 40 AND 100) — so a fixpoint-only exit would never fire on real
     * corpora. Odd-period matches are ignored: the parity phase differs,
     * so recurrence is not implied.
@@ -2425,7 +2031,7 @@ object GraphOps {
     * of ~k^round digits, and past ~12 Louvain sweeps (k≈4) the DRIVER
     * livelocks in BigInteger.multiply during planning — measured on
     * this host: digits 57→262→1080→4351→17438 across budgets 2→10
-    * (StatsProbe), and a budget-40 ProbeLouvainExit burned 18 CPU-min
+    * (StatsProbe), and a budget-40 sweep probe burned 18 CPU-min
     * inside ToomCook3 without finishing sweep ~15. Rebuilding the frame
     * from the checkpointed RDD resets stats to the scan default; result
     * frames are plan-independent (hash-match unaffected), runtime

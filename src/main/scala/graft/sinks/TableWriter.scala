@@ -69,7 +69,7 @@ object TableWriter {
     * with two rows per key has no well-defined SCD1 winner; dedupe
     * upstream with an ordering).
     *
-    * Cost of the default path (measured, ProbeMerge r12 — interleaved
+    * Cost of the default path (measured r12 — interleaved
     * reps, pinned heap): the host-partition semi-join scan prices at
     * ~37% of a 200×-ratio merge (20M-row table, 100K-row delta:
     * default 3.4 s vs stable-keys 2.1 s min-of-3; same ~35% ratio as

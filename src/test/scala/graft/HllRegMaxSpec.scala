@@ -126,13 +126,28 @@ class HllRegMaxSpec extends SparkSpecBase {
     assert(m == r)
   }
 
+  test("an image of another lgK is rejected, not truncated") {
+    // dense lgK=10 image: 1024 registers would pass the length check and
+    // be read as the first 256 — the union must fail loudly instead
+    val dense = new HllSketch(10, TgtHllType.HLL_8)
+    (0L until 5000L).foreach(x => dense.update(x))
+    val img = dense.toUpdatableByteArray
+    assert((img(7) & 3) == 2, "fixture must be in dense HLL mode")
+    val e = intercept[IllegalArgumentException](myUnion(Seq(sk1(1L), img)))
+    assert(e.getMessage.contains("lgK 10"), e.getMessage)
+    // a coupon-mode lgK=10 image too: its slot mask differs from lgK=8's
+    val small = new HllSketch(10, TgtHllType.HLL_8)
+    small.update(7L)
+    intercept[IllegalArgumentException](myUnion(Seq(small.toUpdatableByteArray)))
+  }
+
   test("reach profile and harmonic stay exact on the coupon-mode path fixture") {
     val s = spark
     import s.implicits._
     val path = Seq((1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L), (4L, 5L, 1L))
       .toDF("src", "dst", "weight")
-    val prof = graft.operators.GraphOps.reachProfileOf(path, 5)
-      .collect().map(r => (r.getInt(0), r.getDouble(1)))
+    val prof = graft.operators.GraphOps.reachHarmonicOf(path, 5)._1
+      .map { case (t, e, _) => (t, e) }
     val expected = Seq(5.0, 13.0, 19.0, 23.0, 25.0, 25.0)
     prof.zip(expected).foreach { case ((t, e), x) =>
       assert(math.abs(e - x) < 1e-6, s"round $t: $e != $x") }

@@ -21,7 +21,7 @@ class Wave7Spec extends SparkSpecBase {
     val n = verts.count().toDouble
     val ppr = GraphOps.pprOf(edges, verts, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val pr = GraphOps.pageRankDF(edges, 10)
+    val pr = GraphOps.pageRankOf(edges.withColumn("weight", lit(1L)), 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(ppr.keySet == pr.keySet)
     ppr.foreach { case (v, p) =>

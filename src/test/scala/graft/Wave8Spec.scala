@@ -59,25 +59,6 @@ class Wave8Spec extends SparkSpecBase {
     assert(a2(10L) == 1.0 && a2(11L) == 0.5)
   }
 
-  test("hits: GraphX aggregateMessages leg ≡ DF loop at 6dp (fixture + corpus + gated reroute)") {
-    val s = spark
-    import s.implicits._
-    // fp association order differs between the legs; the 6dp-rounded
-    // output both emit is the leg-identity contract (G5's risk class)
-    val ed = Seq((1L, 10L), (2L, 10L), (3L, 10L), (1L, 11L), (3L, 12L)).toDF("u", "p")
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(toMap(GraphOps.hitsGX(ed, 6)) == toMap(GraphOps.hitsOf(ed, 6)))
-    assert(toMap(GraphOps.hitsGated(ed, 6, maxGraphXEdges = 0L)) ==
-      toMap(GraphOps.hitsGX(ed, 6)), "gate reroute changes the result")
-    val corp = Tables.orders(s, sfDir).select($"o_custkey".as("u"), $"o_orderkey")
-      .join(Tables.lineitem(s, sfDir)
-        .select($"l_orderkey", $"l_partkey".as("p")), $"o_orderkey" === $"l_orderkey")
-      .select($"u", $"p").distinct()
-    assert(toMap(GraphOps.hitsGX(corp, 6)) == toMap(GraphOps.hitsOf(corp, 6)),
-      "corpus leg divergence at 6dp")
-  }
-
   test("hits: round 1 ≡ normalized buyer-degree on the corpus; range and top-k") {
     val s = spark
     import s.implicits._
