@@ -36,7 +36,8 @@ object BenchSf10 {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/target/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val reps = sys.env.get("GRAFT_SF10_REPS").map(_.toInt).getOrElse(2)
     val only = args.toSeq // optional: bench a subset, e.g. "g_hits"
     // fail fast on any unrecognized name (r13, ADVICE r12): silently

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy}
+import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -20,8 +20,10 @@ import graft.{Caches, Tables}
   *
   * Traversal-shaped queries (edges, degree, 2-hop) stay in DataFrames —
   * Catalyst plans them better than Pregel for bounded hops. Whole-graph
-  * analytics (PageRank, components, triangles) hand the pre-aggregated
-  * edge list to GraphX.
+  * analytics with one primitive message per edge (PageRank, weighted
+  * PageRank, components, PPR) hand the pre-aggregated edge list to
+  * GraphX; the rest (triangles, landmark paths, LPA, centralities, …)
+  * run as checkpointed DataFrame loops.
   */
 object GraphOps {
 
@@ -594,69 +596,25 @@ object GraphOps {
     } finally arcs.unpersist()
   }
 
-  /** Hop distances to landmarks for an arbitrary canonical edge frame
-    * (vertices unreachable from a landmark carry no row for it — the
-    * Pregel ShortestPaths contract).
-    *
-    * r10 (ADVICE r9): BOUNDED Pregel — `maxIterations = maxHops` caps the
-    * supersteps, so this leg computes exactly the distances ≤ maxHops the
-    * oracle's recursive CTE (`WHERE hops < maxHops`) and the DF leg's
-    * level loop compute. The stock lib.ShortestPaths runs to convergence,
-    * which made oracle parity depend on corpus eccentricity (~3-4 here)
-    * instead of on the contract; all three legs now share one bound.
-    * State stays the replicated per-vertex Map[landmark→dist] regime the
-    * gate documents (fine at ≤3M edges, the reason the DF leg exists). */
+  /** Hop distances to landmarks for an arbitrary canonical edge frame —
+    * frontier-iteration multi-source BFS (the recursive-CTE oracle shape,
+    * run level-synchronously): seed each landmark (the nLandmarks
+    * smallest node ids) at hop 0, then per level join the frontier
+    * against the cached arc list and anti-join out (node, landmark) pairs
+    * already labeled — BFS discovers each pair at its minimum hop, so
+    * first discovery IS the distance. Each level is two keyed shuffles of
+    * the FRONTIER (≤ V×L rows), never of the full distance table;
+    * localCheckpoint truncates lineage per level (the iterative-DataFrame
+    * pitfall). Levels run to the landmark eccentricity (~3-4 on the
+    * co-purchase graph); `maxHops` bounds them exactly as the oracle's
+    * recursive CTE (`WHERE hops < maxHops`) does. Unreachable pairs emit
+    * no row. Every structure is a flat keyed frame that spills under
+    * pressure: no replicated per-vertex Map[landmark→dist] state. */
   private[graft] def shortestPathsOf(edges: DataFrame, nLandmarks: Int,
       maxHops: Int = 8): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val g = graphOf(edges)
-    val landmarks = g.vertices.map(_._1).takeOrdered(nLandmarks).toSeq
-    val lmSet = landmarks.toSet
-    type SPMap = Map[Long, Long]
-    def merged(a: SPMap, b: SPMap): SPMap =
-      (a.keySet ++ b.keySet).iterator.map { lm =>
-        lm -> math.min(a.getOrElse(lm, Long.MaxValue), b.getOrElse(lm, Long.MaxValue))
-      }.toMap
-    val init: Graph[SPMap, Long] = g.mapVertices((vid, _) =>
-      if (lmSet(vid)) Map(vid -> 0L) else Map.empty[Long, Long])
-    // graphOf mirrors every edge, so src→dst messages walk both directions
-    val res = org.apache.spark.graphx.Pregel(
-        init, Map.empty[Long, Long], maxIterations = maxHops)(
-      (_, attr, msg) => merged(attr, msg),
-      t => {
-        val better = t.srcAttr.iterator
-          .map { case (lm, d) => lm -> (d + 1L) }
-          .filter { case (lm, d) => d < t.dstAttr.getOrElse(lm, Long.MaxValue) }
-          .toMap
-        if (better.nonEmpty) Iterator((t.dstId, better)) else Iterator.empty
-      },
-      merged)
-    val rows = res.vertices.flatMap { case (v, m) => m.map { case (lm, d) => (v, lm, d) } }
-    s.createDataFrame(rows).toDF("part", "landmark", "hops")
-      .orderBy($"part", $"landmark")
-  }
-
-  /** DataFrame leg of G8 — frontier-iteration multi-source BFS (the
-    * recursive-CTE oracle shape, run level-synchronously): seed each
-    * landmark at hop 0, then per level join the frontier against the
-    * cached arc list and anti-join out (node, landmark) pairs already
-    * labeled — BFS discovers each pair at its minimum hop, so first
-    * discovery IS the distance. Each level is two keyed shuffles of the
-    * FRONTIER (≤ V×L rows), never of the full distance table;
-    * localCheckpoint truncates lineage per level (the iterative-DataFrame
-    * pitfall). Levels run to the landmark
-    * eccentricity (~3-4 on the co-purchase graph; `maxHops` bounds
-    * pathological chains). Unreachable pairs emit no row — the Pregel
-    * ShortestPaths contract. Unlike GraphX's replicated per-vertex
-    * Map[landmark→dist] state, every structure here is a flat keyed
-    * frame that spills under pressure instead of dying. */
-  private[graft] def shortestPathsDF(edges: DataFrame, nLandmarks: Int,
-      maxHops: Int = 8): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
     val arcs = loopArcs(edges, withWeight = false)
-    // same landmark choice as the GraphX leg: smallest nLandmarks node ids
     val landmarks = arcs.select($"src").distinct().as[Long]
       .orderBy($"src").limit(nLandmarks).collect().toSeq
     var dist = landmarks.toDF("part")
@@ -678,26 +636,13 @@ object GraphOps {
   }
 
   // G8 — hop distances to landmark products (the Cypher
-  // shortestPath((a)-[*]-(b)) shape, batched over all nodes). Gated like
-  // G7: GraphX Pregel ShortestPaths replicates a Map[landmark→dist] per
-  // vertex into every edge partition that touches it — the same
-  // replicated-state regime that OOMs triangleCount — and was the
-  // slowest sf10 graph query (239 s, r7); above the arc budget the
-  // frontier-iteration DataFrame leg (flat keyed shuffles, spills
-  // instead of dying) answers. Both legs are result-identical (GraphSpec
-  // pins fixture + corpus identity).
+  // shortestPath((a)-[*]-(b)) shape, batched over all nodes). The
+  // frontier BFS runs at every scale: GraphX Pregel replicates a
+  // Map[landmark→dist] per vertex into every edge partition that touches
+  // it, and tied the BFS at sf1 and lost to it at sf0.1 and, 7.2×, at
+  // sf10 (SURVEY §5).
   def shortestPaths(s: SparkSession, dir: String, nLandmarks: Int = 3): DataFrame =
-    shortestPathsGated(edgesUnsorted(s, dir), nLandmarks, Some(s"tri-edges:$dir"))
-
-  private[graft] def shortestPathsGated(edges: DataFrame, nLandmarks: Int,
-      cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 3000000L,
-      maxHops: Int = 8): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) shortestPathsDF(edges, nLandmarks, maxHops)
-    else shortestPathsOf(edges, nLandmarks, maxHops)
-  }
+    shortestPathsOf(edgesUnsorted(s, dir), nLandmarks)
 
   // G15 — WEIGHTED shortest paths to the G8 landmarks (the Cypher
   // shortestPath with a cost accessor / GDS Dijkstra surface): traversal
@@ -710,7 +655,7 @@ object GraphOps {
   // keyed join of the node-sized distance table against the cached arc
   // list and ONE min-aggregation (map-side combinable), localCheckpoint
   // truncating lineage. No per-vertex replicated maps (the GraphX
-  // regime G8 gates away from) — every structure is a flat keyed frame
+  // Pregel regime) — every structure is a flat keyed frame
   // that spills instead of dying. Costs are exact BIGINTs (1e6 div w):
   // min() over integers is order-independent, so the fixed-horizon
   // result is a pure function of the edge list and hash-matches a
@@ -773,9 +718,9 @@ object GraphOps {
     *
     * Two passes of level-synchronous frontier iteration, both shuffling
     * only level-sized frames against the ONE pre-partitioned arc
-    * checkpoint (the pprOf discipline):
+    * checkpoint (the loopArcs discipline):
     *
-    *  - FORWARD (the shortestPathsDF shape + path counts): per level,
+    *  - FORWARD (the shortestPathsOf shape + path counts): per level,
     *    frontier rows (source, v, σ) join the arcs, aggregate
     *    σ(dst) = Σ σ(pred) with map-side combine, anti-join out nodes
     *    already labeled. BFS discovers each (source, node) at its
@@ -882,17 +827,16 @@ object GraphOps {
   // Σ 1/d (Boldi-Vigna's recommendation for disconnected graphs, where
   // the classic ratio misbehaves). Harmonic terms round to 6dp and sum
   // as DECIMAL — order-independent, engine-identical; the ratio is one
-  // division of exact BIGINTs. Reuses the G8 gated BFS verbatim, so the
-  // scan work is shared with g_shortest_paths under the session cache.
+  // division of exact BIGINTs. Reuses G8's frontier BFS verbatim, so the
+  // edge scan is shared with g_shortest_paths under the session cache.
   def closeness(s: SparkSession, dir: String, nLandmarks: Int = 3): DataFrame =
-    closenessOf(edgesUnsorted(s, dir), nLandmarks, Some(s"tri-edges:$dir"))
+    closenessOf(edgesUnsorted(s, dir), nLandmarks)
 
   /** G20 core over an arbitrary canonical edge frame (fixture-testable). */
-  private[graft] def closenessOf(edges: DataFrame, nLandmarks: Int,
-      cacheKey: Option[String] = None): DataFrame = {
+  private[graft] def closenessOf(edges: DataFrame, nLandmarks: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val d = shortestPathsGated(edges, nLandmarks, cacheKey)
+    val d = shortestPathsOf(edges, nLandmarks)
     d.filter($"hops" > 0)
       .groupBy($"part")
       .agg(count(lit(1)).as("n_reached"), sum($"hops").as("sum_hops"),
@@ -903,32 +847,21 @@ object GraphOps {
       .orderBy($"part")
   }
 
-  /** Per-node triangle counts for an arbitrary canonical edge frame. */
-  /** GraphX leg of G7 — kept for the regime where the replicated
-    * per-vertex neighbor sets fit memory (see triangleCountOf's gate). */
-  private[graft] def triangleCountGraphX(edges: DataFrame): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val tc = graphOf(edges)
-      .partitionBy(PartitionStrategy.RandomVertexCut)
-      .triangleCount().vertices
-      .mapValues(_.toLong)
-    s.createDataFrame(tc).toDF("part", "triangles")
-      .orderBy($"part")
-  }
-
-  /** DataFrame leg of G7 — the compact-forward / degree-oriented exact
-    * triangle count (Latapy 2008, the standard external-memory-friendly
-    * formulation): orient every canonical edge from its (deg, id)-smaller
-    * endpoint, enumerate out-wedges at each triangle's unique order-
-    * minimum apex, close them against the canonical edge set. Degree
-    * orientation bounds out-degrees by ~√(2m) on any graph (d/2 on
-    * uniform ones), so wedge volume is Σ C(outdeg,2) streaming through
-    * an ordinary keyed shuffle join — it SPILLS under pressure instead
-    * of dying: GraphX's replicated VertexSets OOM'd a 64 GiB JVM on the
-    * sf10 co-purchase graph (dense uniform deg ≈ 222, replication ≈
-    * partition count) where this plan completes. */
-  private[graft] def triangleCountDF(edges: DataFrame,
+  /** G7 core over an arbitrary canonical edge frame — the compact-
+    * forward / degree-oriented exact triangle count (Latapy 2008, the
+    * standard external-memory-friendly formulation): orient every
+    * canonical edge from its (deg, id)-smaller endpoint, enumerate
+    * out-wedges at each triangle's unique order-minimum apex, close them
+    * against the canonical edge set. Degree orientation bounds
+    * out-degrees by ~√(2m) on any graph (d/2 on uniform ones), so wedge
+    * volume is Σ C(outdeg,2) streaming through an ordinary keyed shuffle
+    * join — it SPILLS under pressure instead of dying: GraphX's
+    * replicated VertexSets OOM'd a 16 GiB JVM at sf1 and a 64 GiB one on
+    * the sf10 co-purchase graph (dense uniform deg ≈ 222, replication ≈
+    * partition count) where this plan completes, and lost to it at sf0.1
+    * (SURVEY §5). Every node of the edge frame gets a row, 0 when it
+    * closes no triangle. */
+  private[graft] def triangleCountOf(edges: DataFrame,
       cacheKey: Option[String] = None): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
@@ -963,37 +896,8 @@ object GraphOps {
       .orderBy($"part")
   }
 
-  /** G7 core with the same gate discipline as node similarity: the two
-    * legs are result-identical (fixture spec pins it), so the choice is
-    * purely a memory regime. GraphX replicates each vertex's neighbor
-    * SET to every edge partition that touches it; measured on the
-    * co-purchase graph (r7): fatal at 12M canonical edges in a 16 GiB
-    * JVM and at 120M edges in 64 GiB, while it wins over the DF leg
-    * whenever it does fit (34 s vs 46 s at 12M edges / 64 GiB). The
-    * default bound keeps a DEFAULT-8-GiB JVM safe (sf0.1's 1.2M edges
-    * pass everywhere; 2.5× that as margin); deployments with 64 GiB
-    * executors can raise it ~10× (12M measured good). Above the bound
-    * the DF plan completes by spilling — 46 s at 12M edges in 16 GiB
-    * where GraphX is context-fatal; at 120M dense edges its ~10B wedge
-    * shuffle runs long but finishes, which is what exact per-node
-    * counts cost there (an edge-sampling estimator is the cheap
-    * alternative if ±ε suffices). The gate counts canonical edges (one
-    * memoized scalar per corpus). */
-  private val edgeCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private[graft] def triangleCountOf(edges: DataFrame,
-      cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 3000000L): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) triangleCountDF(edges, cacheKey)
-    else triangleCountGraphX(edges)
-  }
-
   // G7 — per-node triangle counts (clustering structure; GraphSpec
-  // asserts exact counts on a planted fixture graph and that both legs
-  // agree there).
+  // asserts exact hand-computed counts on planted fixture graphs).
   def triangleCount(s: SparkSession, dir: String): DataFrame =
     triangleCountOf(edgesUnsorted(s, dir), Some(s"tri-edges:$dir"))
 
@@ -1015,7 +919,7 @@ object GraphOps {
       graft.operators.TextOps.h64(
         concat(lit("tri:"), $"src", lit(":"), $"dst")) % 1000000L
         < math.round(p * 1000000).toLong)
-    triangleCountDF(keep)
+    triangleCountOf(keep)
       .select($"part",
         round($"triangles" / (p * p * p)).cast("long").as("triangles_est"))
   }
@@ -1074,7 +978,7 @@ object GraphOps {
     * BIGINT weight sums — no float drift between engines.
     *
     * The arc frame is repartitioned by `src` BEFORE the checkpoint (the
-    * pprOf/hitsOf join-order lesson): every per-round join then reuses
+    * hitsOf join-order lesson): every per-round join then reuses
     * that hashpartitioning and shuffles only the node-sized label frame,
     * never the 2|E| mirrored arcs (at sf10 that per-round arc shuffle
     * was 240M rows × 5 rounds — the r8 bench's heavy tail). The argmax
@@ -1259,90 +1163,28 @@ object GraphOps {
     recommendOn(edgesUnsorted(s, dir), owned, k)
   }
 
-  /** PPR core over an arbitrary canonical edge frame and a seed-id frame
-    * (`pk` rows): r ← 0.15·pv + 0.85·Σ r_u/deg(u), where the
-    * personalization vector pv puts 1/|S| on each in-graph seed and 0
-    * elsewhere — teleport mass returns to the SEED SET, not uniformly, so
-    * rank measures topology-weighted proximity to the seeds. Fixed
-    * synchronous rounds (G5's contract) ⇒ the result is a pure function
-    * of (edges, seeds) and replays as a recursive CTE. Per iteration:
-    * one shuffle of the node-sized rank frame against the cached
-    * degree-annotated arc list, localCheckpoint
-    * lineage truncation. |S| is the one driver scalar (a count — the
-    * k-means-centroid argument); 1.0/|S| and 0.15·pv are single IEEE
-    * divisions/products written identically by the oracle. */
+  /** PPR core over an arbitrary canonical (src, dst, weight) edge frame
+    * and a seed-id frame (`pk` rows): r ← 0.15·pv + 0.85·Σ r_u/deg(u),
+    * where the personalization vector pv puts 1/|S| on each in-graph seed
+    * and 0 elsewhere — teleport mass returns to the SEED SET, not
+    * uniformly, so rank measures topology-weighted proximity to the
+    * seeds. Fixed synchronous rounds (G5's contract) ⇒ the result is a
+    * pure function of (edges, seeds) and replays as a recursive CTE.
+    *
+    * GraphX aggregateMessages (r9): PPR is PageRank with a seed-biased
+    * teleport — primitive-double messages, ONE send/reduce per round —
+    * the regime where GraphX beats a checkpointed-DF loop (PageRank GX
+    * 16.5 s vs DF 25.9 s at sf1, 77-104 s vs 326 s at sf10; PPR 5.8 s
+    * vs 9.9 s at sf0.1, SURVEY §5). Oracle arithmetic: |S| is the one
+    * driver scalar (a count — the k-means-centroid argument); the edge
+    * attr is rdeg = 1.0/deg(src), the oracle's darcs reciprocal, so each
+    * message is r·rdeg term-for-term (no division-vs-reciprocal ulp gap);
+    * 1.0/|S| and tp = 0.15·pv are single IEEE divisions/products written
+    * identically by the oracle, and a non-seed's 0.0 + 0.85·Σ is the
+    * oracle's 0.15·0.0 + 0.85·Σ. Only the Σ association order differs
+    * from the oracle — G5's 6dp-absorbed class. The seed set rides a
+    * broadcast variable, bounded at one customer's parts. */
   private[graft] def pprOf(edges: DataFrame, seedIds: DataFrame,
-      iters: Int): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val arcs = edges.select($"src", $"dst")
-      .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
-    val deg = arcs.groupBy($"src").agg(count(lit(1)).as("deg"))
-    val seeds = deg.select($"src".as("v"))
-      .join(broadcast(seedIds.select($"pk".as("v"))), Seq("v"), "semi")
-      .localCheckpoint(eager = true)
-    val nSeeds = seeds.count()
-    if (nSeeds == 0) // no in-graph seed (or empty graph): empty relation,
-      return deg.select($"src".as("part"), lit(0.0).as("ppr")).limit(0)
-    val pv = 1.0 / nSeeds
-    val verts = deg.select($"src".as("v"))
-      .join(seeds.withColumn("sd", lit(true)), Seq("v"), "left")
-      .select($"v", when($"sd", lit(pv)).otherwise(lit(0.0)).as("pv"))
-      .localCheckpoint(eager = true)
-    // Per round: ONE keyed join + ONE narrow-key agg + a BROADCAST
-    // teleport attach. The teleport term 0.15·pv is nonzero only on the
-    // seed set (≈ one customer's parts), so it never needs a vertex-wide
-    // join or a widened group key — the tiny seed frame broadcasts and
-    // the add happens map-side. Bitwise identical to the oracle's
-    // 0.15·pv + 0.85·Σ: non-seeds compute 0.15·0.0 + x ≡ 0.0 + x there
-    // and coalesce(null→0.0) + x here — the same IEEE sum. Every vertex
-    // of the mirrored graph has in-arcs, so the message agg covers the
-    // whole vertex set each round (no left-join backfill). The arc
-    // frame goes through partitionedCheckpoint (r9: a bare
-    // localCheckpoint under AQE records UnknownPartitioning and every
-    // round re-shuffled the arcs — the join-order comment here used to
-    // claim otherwise) so per-round joins shuffle only the node-sized
-    // rank frame. rdeg = 1.0/deg is PRECOMPUTED on the arc frame (r9,
-    // ADVICE r8): the oracle's darcs carries rdeg = 1.0/COUNT(...) and
-    // sums r * rdeg, so the loop below multiplies by the same
-    // reciprocal — term-for-term IEEE-identical, no division-vs-
-    // reciprocal ulp gap (and one divide per arc per round becomes a
-    // multiply).
-    val arcsD = partitionedCheckpoint(
-      arcs.join(deg, "src")
-        .select($"src", $"dst", (lit(1.0) / $"deg").as("rdeg")), "src",
-      sorted = true)
-    val tp = 0.15 * pv // one IEEE product, the oracle's 0.15 * pv.pv
-    val seedTp = seeds.select($"v".as("dst"), lit(tp).as("tp"))
-    var ranks = verts.select($"v", $"pv".as("rank"))
-      .localCheckpoint(eager = true)
-    // r17: rank state is consumed once per round, so checkpoint every
-    // SECOND round (the communitiesOf cadence argument); bit-identical
-    for (i <- 0 until iters) {
-      ranks = arcsD.join(ranks, $"src" === $"v")
-        .groupBy($"dst")
-        .agg(sum($"rank" * $"rdeg").as("msg"))
-        .join(broadcast(seedTp), Seq("dst"), "left")
-        .select($"dst".as("v"),
-          (coalesce($"tp", lit(0.0)) + lit(0.85) * $"msg").as("rank"))
-      if (i % 2 == 1 || i == iters - 1)
-        ranks = ranks.localCheckpoint(eager = true)
-    }
-    ranks.select($"v".as("part"), round($"rank", 6).as("ppr"))
-  }
-
-  /** GraphX aggregateMessages twin of pprOf (r9): PPR is PageRank with
-    * a seed-biased teleport — primitive-double messages, ONE
-    * send/reduce per round — exactly the regime where GraphX beats the
-    * checkpointed-DF loop (the r9 control measurement: PageRank GX
-    * 16.5 s vs DF 25.9 s at sf1, 77-104 s vs 326 s at sf10). Identical
-    * update arithmetic: edge attr rdeg = 1.0/deg(src), vertex update
-    * tp + 0.85·Σ(rank·rdeg) with tp = 0.15·pv folded once (the pprOf
-    * broadcast-teleport shape — the seed set rides a broadcast
-    * variable, bounded at one customer's parts). Differs from the DF
-    * leg only in fp association order — G5's 6dp-absorbed class
-    * (GraphSpec pins leg identity). */
-  private[graft] def pprGX(edges: DataFrame, seedIds: DataFrame,
       iters: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
@@ -1353,7 +1195,7 @@ object GraphOps {
     if (nSeeds == 0)
       return Seq.empty[(Long, Double)].toDF("part", "ppr")
     val pv = 1.0 / nSeeds
-    val tp = 0.15 * pv // one IEEE product, the pprOf/oracle shape
+    val tp = 0.15 * pv // one IEEE product, the oracle shape
     var rank: Graph[Double, Double] = g
       .outerJoinVertices(g.outDegrees) { (_, _, d) => d.getOrElse(0) }
       .mapTriplets(e => 1.0 / e.srcAttr,
@@ -1374,18 +1216,6 @@ object GraphOps {
     }
     s.createDataFrame(rank.vertices).toDF("part", "raw")
       .select($"part", round($"raw", 6).as("ppr"))
-  }
-
-  /** Gate for G16 (r9): GraphX in the primitive-message at-memory
-    * regime (the default budget admits sf10), the checkpointed-DF loop
-    * beyond it (spills instead of dying). Legs 6dp-identical. */
-  private[graft] def pprGated(edges: DataFrame, seedIds: DataFrame,
-      iters: Int, cacheKey: Option[String] = None,
-      maxGraphXEdges: Long = 150000000L): DataFrame = {
-    def count = edges.count()
-    val m = cacheKey.fold(count)(key => edgeCountMemo.getOrElseUpdate(key, count))
-    if (m > maxGraphXEdges) pprOf(edges, seedIds, iters)
-    else pprGX(edges, seedIds, iters)
   }
 
   /** Walk core over a canonical edge frame: `nWalks` DETERMINISTIC
@@ -1635,14 +1465,16 @@ object GraphOps {
   // this is its multi-hop generalization: mass diffuses through the
   // whole co-purchase topology instead of stopping at direct
   // neighbors). Seeds = the customer's distinct in-graph parts (G12's
-  // owned-set convention, custKey=1).
+  // owned-set convention, custKey=1). pprOf's GraphX loop runs at every
+  // scale: its primitive-double messages beat a checkpointed-DF loop at
+  // sf0.1 and sf10 (SURVEY §5).
   def personalizedPageRank(s: SparkSession, dir: String, custKey: Long = 1L,
       iters: Int = 10, k: Int = 20): DataFrame = {
     import s.implicits._
     val owned = Tables.orders(s, dir).filter($"o_custkey" === custKey)
       .join(Tables.lineitem(s, dir), $"o_orderkey" === $"l_orderkey")
       .select($"l_partkey".as("pk")).distinct()
-    pprGated(edgesUnsorted(s, dir), owned, iters, Some(s"tri-edges:$dir"))
+    pprOf(edgesUnsorted(s, dir), owned, iters)
       .orderBy($"ppr".desc, $"part")
       .limit(k)
   }

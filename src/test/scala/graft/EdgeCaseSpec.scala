@@ -105,7 +105,7 @@ class EdgeCaseSpec extends SparkSpecBase {
     // empty rollup: engines agree there are zero groups (no ALL row from
     // a zero-row scan would differ from DuckDB's — pin the count)
     assert(CorpusPipeline.dataCard(spark, emptyDir).count() <= 1)
-    assert(GraphOps.triangleCountDF(
+    assert(GraphOps.triangleCountOf(
       spark.emptyDataFrame.selectExpr("1L as src", "2L as dst").limit(0)).count() == 0)
     Caches.clearAll()
     // one doc: its own cluster, its own split; one source row + ALL row
@@ -156,14 +156,13 @@ class EdgeCaseSpec extends SparkSpecBase {
     val s = spark
     import s.implicits._
     // PPR without any in-graph seed: empty relation, not an exception
-    val edges = Seq((1L, 2L)).toDF("src", "dst")
+    val edges = Seq((1L, 2L, 1L)).toDF("src", "dst", "weight")
     assert(GraphOps.pprOf(edges, Seq(99L).toDF("pk"), 3).count() == 0)
     assert(GraphOps.pprOf(edges.limit(0), Seq(1L).toDF("pk"), 3).count() == 0)
     // walks on an empty edge frame: no rows
     assert(GraphOps.randomWalksOf(edges.limit(0), 2, 3).count() == 0)
-    // r9: centralities on empty and single-edge graphs (closenessOf
-    // rides the G8 gate into graphOf, which reads the canonical
-    // 3-column (src, dst, weight) frame)
+    // r9: centralities on empty and single-edge graphs, over the
+    // canonical 3-column (src, dst, weight) frame the contract builds
     val wedges = Seq((1L, 2L, 1L)).toDF("src", "dst", "weight")
     assert(GraphOps.betweennessOf(wedges.limit(0), 3, 8).count() == 0)
     assert(GraphOps.closenessOf(wedges.limit(0), 3).count() == 0)

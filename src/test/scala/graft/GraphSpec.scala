@@ -77,21 +77,15 @@ class GraphSpec extends SparkSpecBase {
     assert(tc == Map(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 0, 5L -> 0), s"got $tc")
   }
 
-  test("triangle count: degree-oriented DF leg ≡ GraphX leg (incl. above-gate reroute)") {
+  test("triangle count: K4 + shared apex + pendant has hand-computed counts") {
     // overlapping triangles + K4 stress the one-apex-per-triangle claim:
-    // K4 {1,2,3,4} has 4 triangles (3 per node), 5 closes two more with
-    // {1,2} and {2,3}... plus an isolated-from-triangles pendant
+    // K4 {1,2,3,4} has 4 triangles (3 per node); 5 joins 1, 2 and 3 and
+    // closes {1,2,5}, {1,3,5}, {2,3,5}; the pendant 6 closes none
     val g = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (1L, 5L), (2L, 5L), (3L, 5L), (5L, 6L))
-    val gx = GraphOps.triangleCountGraphX(g).collect()
+    val tc = GraphOps.triangleCountOf(g).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val df = GraphOps.triangleCountDF(g).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(df == gx, s"df $df vs graphx $gx")
-    // a gate of 0 forces the DF leg through the public entry point
-    val gated = GraphOps.triangleCountOf(g, maxGraphXEdges = 0L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gated == gx, s"gated $gated vs graphx $gx")
+    assert(tc == Map(1L -> 5, 2L -> 5, 3L -> 5, 4L -> 3, 5L -> 3, 6L -> 0), s"got $tc")
   }
 
   test("sampled triangle estimate: exact at p=1, within band on a dense fixture") {
@@ -100,7 +94,7 @@ class GraphSpec extends SparkSpecBase {
     val k20 = edges((for {
       a <- 1L to 20L; b <- (a + 1) to 20L
     } yield (a, b)): _*)
-    val exact = GraphOps.triangleCountDF(k20).collect()
+    val exact = GraphOps.triangleCountOf(k20).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(exact.values.forall(_ == 171L), s"got $exact")
     val atOne = GraphOps.triangleCountSampled(k20, 1.0).collect()
@@ -285,27 +279,29 @@ class GraphSpec extends SparkSpecBase {
     assert(got == want, s"got $got") // islands carry no rows: unreachable
   }
 
-  test("shortest paths: frontier-BFS DF leg ≡ GraphX leg (fixture + gated reroute)") {
-    // same planted path + island; both legs and the gate's reroute side
-    // must agree cell-for-cell, including absent rows for the island
-    val g = edges((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val gx = toMap(GraphOps.shortestPathsOf(g, nLandmarks = 2))
-    val df = toMap(GraphOps.shortestPathsDF(g, nLandmarks = 2))
-    assert(df == gx, s"DF leg diverges: $df vs $gx")
-    val rerouted = toMap(GraphOps.shortestPathsGated(g, 2, maxGraphXEdges = 0L))
-    assert(rerouted == gx, "gate reroute changes the result")
-  }
-
-  test("shortest paths: both legs agree on the sf0.001 co-purchase graph") {
+  test("shortest paths: sf0.001 corpus equals a plain-Scala multi-source BFS") {
     val e = GraphOps.copurchaseEdges(spark, sfDir)
       .select("src", "dst", "weight")
-    val gx = GraphOps.shortestPathsOf(e, nLandmarks = 3).collect()
+    val got = GraphOps.shortestPathsOf(e, nLandmarks = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val df = GraphOps.shortestPathsDF(e, nLandmarks = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(df == gx, s"corpus divergence: ${(df diff gx).take(5)} / ${(gx diff df).take(5)}")
+    // reference: one queue-free BFS per landmark (the 3 smallest node
+    // ids) over the mirrored adjacency, bounded at the default 8 hops
+    val adj = e.collect().toSeq
+      .flatMap { r => val (a, b) = (r.getLong(0), r.getLong(1)); Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2)
+    val want = adj.keys.toSeq.sorted.take(3).flatMap { lm =>
+      var dist = Map(lm -> 0L)
+      var frontier = Set(lm)
+      var hop = 1L
+      while (hop <= 8 && frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj).filterNot(dist.contains)
+        dist ++= frontier.map(_ -> hop)
+        hop += 1
+      }
+      dist.map { case (v, d) => (v, lm, d) }
+    }.toSet
+    assert(want.nonEmpty)
+    assert(got == want, s"corpus divergence: ${(got diff want).take(5)} / ${(want diff got).take(5)}")
   }
 
   test("pagerank on the corpus: positive ranks, top-k size, deterministic order") {
@@ -464,24 +460,37 @@ class GraphSpec extends SparkSpecBase {
     assert(labelsOf(corpus, 5) == lpa(corpus, 5), "corpus labels diverge from the reference")
   }
 
-  test("ppr: GraphX aggregateMessages leg ≡ DF loop at 6dp (fixture + corpus + gated reroute)") {
+  test("ppr: fixture and corpus ranks equal a plain-Scala iteration") {
     val s = spark
     import s.implicits._
-    val fx = edges((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L))
-    val seeds = Seq(1L).toDF("pk")
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(toMap(GraphOps.pprGX(fx, seeds, 10)) == toMap(GraphOps.pprOf(fx, seeds, 10)))
-    assert(toMap(GraphOps.pprGated(fx, seeds, 10, maxGraphXEdges = 0L)) ==
-      toMap(GraphOps.pprOf(fx, seeds, 10)), "gate reroute changes the result")
-    // no in-graph seed: both legs answer the empty relation
-    assert(GraphOps.pprGX(fx, Seq(99L).toDF("pk"), 3).count() == 0)
+    // r ← 0.15·pv + 0.85·Σ r_u/deg(u), pv = 1/|S| on the in-graph seeds,
+    // starting from pv; the kept leg rounds to 6dp, inside the 1e-6 band
+    def pprRef(es: Seq[(Long, Long)], seeds: Set[Long], iters: Int): Map[Long, Double] = {
+      val arcs = es.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      val deg = arcs.groupMapReduce(_._1)(_ => 1)(_ + _)
+      val in = seeds.filter(deg.contains)
+      val pv = 1.0 / in.size
+      var r = deg.map { case (v, _) => v -> (if (in(v)) pv else 0.0) }
+      for (_ <- 0 until iters) {
+        val msg = arcs.groupMapReduce(_._2) { case (u, _) => r(u) / deg(u) }(_ + _)
+        r = r.map { case (v, _) =>
+          v -> ((if (in(v)) 0.15 * pv else 0.0) + 0.85 * msg.getOrElse(v, 0.0)) }
+      }
+      r
+    }
+    val fx = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L))
+    assertRanksMatch(ranksOf(GraphOps.pprOf(edges(fx: _*), Seq(1L).toDF("pk"), 10)),
+      pprRef(fx, Set(1L), 10))
+    // no in-graph seed: the empty relation
+    assert(GraphOps.pprOf(edges(fx: _*), Seq(99L).toDF("pk"), 3).count() == 0)
     val e = GraphOps.copurchaseEdges(spark, sfDir).select("src", "dst", "weight")
     val owned = Tables.orders(s, sfDir).filter($"o_custkey" === 1L)
       .join(Tables.lineitem(s, sfDir), $"o_orderkey" === $"l_orderkey")
       .select($"l_partkey".as("pk")).distinct()
-    assert(toMap(GraphOps.pprGX(e, owned, 10)) == toMap(GraphOps.pprOf(e, owned, 10)),
-      "corpus leg divergence at 6dp")
+    val corpus = e.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+    val seeds = owned.as[Long].collect().toSet
+    assert(seeds.exists(p => corpus.exists { case (a, b) => a == p || b == p }))
+    assertRanksMatch(ranksOf(GraphOps.pprOf(e, owned, 10)), pprRef(corpus, seeds, 10))
   }
 
   test("communities: deterministic on the corpus, labels are member nodes") {

@@ -14,14 +14,14 @@ class Wave7Spec extends SparkSpecBase {
   test("ppr: uniform seed set over all vertices ≡ standard PageRank / n") {
     val s = spark
     import s.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
-      .toDF("src", "dst")
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 1L), (3L, 4L, 1L))
+      .toDF("src", "dst", "weight")
     val verts = edges.select($"src".as("pk"))
       .unionAll(edges.select($"dst".as("pk"))).distinct()
     val n = verts.count().toDouble
     val ppr = GraphOps.pprOf(edges, verts, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val pr = GraphOps.pageRankOf(edges.withColumn("weight", lit(1L)), 10)
+    val pr = GraphOps.pageRankOf(edges, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(ppr.keySet == pr.keySet)
     ppr.foreach { case (v, p) =>
@@ -32,7 +32,8 @@ class Wave7Spec extends SparkSpecBase {
   test("ppr: mass stays in the seed component; total mass ≈ 1") {
     val s = spark
     import s.implicits._
-    val edges = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst") // two components
+    val edges = Seq((1L, 2L, 1L), (3L, 4L, 1L))
+      .toDF("src", "dst", "weight") // two components
     val seeds = Seq(1L).toDF("pk")
     val ppr = GraphOps.pprOf(edges, seeds, 10)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
